@@ -13,6 +13,10 @@ import os
 from pyspark.sql import SparkSession
 
 
+# explicit paths a local session lists on the driver, without a job
+DRIVER_LISTING_THRESHOLD = 1024
+
+
 def _cpus() -> int:
     try:
         return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4))
@@ -45,6 +49,14 @@ def get_spark(
         .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # List explicit path sets up to this size on the driver.  Above
+        # the default (32) every file-stream micro-batch ran a listing
+        # job whose tasks deserialize a Hadoop conf to stat local files
+        # in this same JVM.
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(DRIVER_LISTING_THRESHOLD),
+        )
     )
     # Cluster posture (r17, guide §5): SPARK_GRAFT_STATE_STORE=rocksdb
     # switches streaming state to the built-in RocksDB provider —

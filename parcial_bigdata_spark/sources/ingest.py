@@ -31,6 +31,10 @@ from pyspark.sql import types as T
 
 PAYLOAD_SCHEMA = T.ArrayType(T.ArrayType(T.StringType()))
 
+# epoch-ms of 0001-01-01T00:00:00Z and 9999-12-31T23:59:59.999Z
+MIN_EPOCH_MS = -62_135_596_800_000
+MAX_EPOCH_MS = 253_402_300_799_999
+
 SILVER_SCHEMA = T.StructType(
     [
         T.StructField("fechahora", T.TimestampType(), False),
@@ -60,7 +64,9 @@ def parse_rows(bronze: DataFrame) -> DataFrame:
     """Explode payloads into candidate rows with permissive typed casts.
 
     Output columns: source_file, fechahora, valor, plus ``ok`` marking
-    rows that parsed (both fields non-null, exactly-2-element tuple).
+    rows that parsed (both fields non-null, exactly-2-element tuple,
+    epoch-ms inside ``MIN_EPOCH_MS..MAX_EPOCH_MS``; ``fechahora`` is NULL
+    outside that range).
     Files whose top level is not a list parse to NULL and contribute zero
     rows (the reference aborts those files wholesale — P5).
     """
@@ -78,15 +84,24 @@ def parse_rows(bronze: DataFrame) -> DataFrame:
     # element_at THROWS under ANSI) and the decimal(12,4) range probe
     # marks values the silver schema cannot store as bad rows instead of
     # letting the at-rest cast blow up the write.
+    #
+    # An epoch-ms can fit bigint yet lie outside what a timestamp (or a
+    # Python datetime on collect) holds: timestamp_millis overflows and
+    # fails the whole batch.  Only epochs in the reference's datetime
+    # range [0001-01-01, 9999-12-31 23:59:59.999] UTC are ok, and the
+    # timestamp is computed only inside it.
     ts_ms = F.try_element_at("pair", F.lit(1)).try_cast("bigint")
     val = F.try_element_at("pair", F.lit(2)).try_cast("double")
+    ts_in_range = ts_ms.isNotNull() & ts_ms.between(MIN_EPOCH_MS, MAX_EPOCH_MS)
     return exploded.select(
         "source_file",
-        F.date_trunc("second", F.timestamp_millis(ts_ms)).alias("fechahora"),
+        F.when(
+            ts_in_range, F.date_trunc("second", F.timestamp_millis(ts_ms))
+        ).alias("fechahora"),
         val.alias("valor_raw"),
         (
             (F.size("pair") == 2)
-            & ts_ms.isNotNull()
+            & ts_in_range
             & val.try_cast("decimal(12,4)").isNotNull()
         ).alias("ok"),
     )

@@ -11,23 +11,25 @@ Reference semantics preserved / upgraded:
   delivery — an upgrade from at-least-once to exactly-once discovery.
 - ST3 delivery: the reference re-inserts rows when an event redelivers
   (no PK, ``lambda/subirDB.py:72-77,116``).  We keep append-only silver
-  but make the write idempotent per source file: a batch first anti-joins
-  its file set against the files already present in silver, so a replayed
-  batch writes nothing.
+  but make the write idempotent per source file: a batch writes only the
+  rows of files that neither the processed-files ledger nor silver
+  itself already holds, so a replayed batch writes nothing.
 - ST5 bad data: per-row drop-and-count runs in the same permissive parse
   as batch ingest (sources/ingest.py — one code path for both).
-- ST6 empty batch: zero surviving rows → skip the write, still record
+- ST6 empty batch: zero new rows → skip the write, still record
   accounting.
 
 Scale: the file source lists incrementally (``maxFilesPerTrigger``
-bounds batch size); the idempotency filter anti-joins each batch's
-files against a PROCESSED-FILES LEDGER parquet (one row per ingested
-file — O(files), tiny) UNIONED with the silver files already present
-in the batch's own ``dt`` partitions.  The ledger covers every
-committed batch cheaply; the partition-pruned silver probe covers the
-one window the ledger cannot — a crash BETWEEN the silver write and
-the ledger append, where the replayed batch's files are in silver but
-not yet in the ledger.  A replayed file's rows land in exactly the dt
+bounds batch size), and each micro-batch costs a fixed handful of Spark
+jobs whatever the table size (``make_silver_batch_writer``).  Its
+driver-side state is O(batch files): one summary row per file and the
+batch's file names.  The idempotency check reads a PROCESSED-FILES
+LEDGER parquet (one row per ingested file — O(files), tiny) and the
+silver files in the batch's own ``dt`` partitions.  The ledger covers
+every committed batch; the partition-pruned silver probe covers the one
+window the ledger cannot — a crash BETWEEN the silver write and the
+ledger append, where the replayed batch's files are in silver but not
+yet in the ledger.  A replayed file's rows land in exactly the dt
 partitions its deterministic parse produces, so probing the current
 batch's own dt set always sees the crashed-write copy; the probe is
 O(partitions the batch touches) every batch, never O(table).  Every
@@ -37,12 +39,18 @@ transform is the same codegen'd expression pipeline as batch.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from parcial_bigdata_spark.sources.ingest import parse_rows, silver_rows
+from parcial_bigdata_spark.sources.ingest import parse_rows, silver_rows, write_silver
+
+# Declared read schemas: a declared schema skips parquet's footer
+# inference job.  The probe reads only these columns of each table.
+_LEDGER_SCHEMA = "source_file string, batch_id bigint"
+_SILVER_PROBE_SCHEMA = "source_file string, dt date"
 
 
 def read_bronze_stream(
@@ -67,15 +75,16 @@ def read_bronze_stream(
     )
 
 
-def _read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a parquet table, returning None ONLY when the path does not
-    exist yet (first batch).  Any other failure — corrupt footer,
-    permissions, object-store hiccup — re-raises: swallowing it would
-    silently disable the idempotency anti-join and write duplicates."""
+def _read_declared(spark: SparkSession, path: str, schema: str) -> DataFrame | None:
+    """Read a parquet table under a declared schema, returning None ONLY
+    when the path does not exist yet (first batch).  Any other failure —
+    corrupt footer, permissions, object-store hiccup — raises, at the
+    latest when the frame first runs: swallowing it would silently
+    disable the idempotency check and write duplicates."""
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
     except AnalysisException as e:
         if (e.getCondition() or "") == "PATH_NOT_FOUND":
             return None
@@ -85,25 +94,20 @@ def _read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
 def _existing_files(
     spark: SparkSession, silver_path: str, dts: list | None = None
 ) -> DataFrame | None:
-    """Silver-derived processed-file set for the crash-window side of
-    the idempotency filter.  ``dts`` restricts the scan to the given
-    ``dt`` partitions — sound because the caller passes the CURRENT
-    batch's distinct event dates: the silver write is job-atomic, and a
-    file's rows land in exactly the dt partitions its parse produces
-    (deterministically), so any crashed-write copy of a current-batch
-    file is visible inside the current batch's own dt set.  Probe cost
-    is O(partitions the batch touches), not O(table) (round-4 verdict
-    item 5)."""
-    df = _read_parquet_if_exists(spark, silver_path)
+    """Silver-derived file names for the crash-window side of the
+    idempotency check, one row per silver row.  ``dts`` restricts the
+    scan to the given ``dt`` partitions — sound because the caller
+    passes the CURRENT batch's event dates: the silver write is
+    job-atomic, and a file's rows land in exactly the dt partitions its
+    parse produces (deterministically), so any crashed-write copy of a
+    current-batch file is visible inside the current batch's own dt set.
+    Probe cost is O(partitions the batch touches), not O(table)."""
+    df = _read_declared(spark, silver_path, _SILVER_PROBE_SCHEMA)
     if df is None:  # first batch: silver does not exist yet
         return None
     if dts is not None:
-        non_null = [d for d in dts if d is not None]
-        cond = F.col("dt").isin(non_null)
-        if len(non_null) < len(dts):  # unparseable dates partition separately
-            cond = cond | F.col("dt").isNull()
-        df = df.where(cond)
-    return df.select("source_file").distinct()
+        df = df.where(F.col("dt").isin(dts))
+    return df.select("source_file")
 
 
 def _ledger_path(silver_path: str) -> str:
@@ -111,102 +115,122 @@ def _ledger_path(silver_path: str) -> str:
 
 
 def _read_ledger(spark: SparkSession, silver_path: str) -> DataFrame | None:
-    return _read_parquet_if_exists(spark, _ledger_path(silver_path))
+    return _read_declared(spark, _ledger_path(silver_path), _LEDGER_SCHEMA)
 
 
 def make_silver_batch_writer(
     silver_path: str,
     on_metrics: Callable[[int, dict], None] | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch body: idempotent per-file append + accounting.
+    """foreachBatch body: idempotent per-file append + accounting, in
+    four steps and at most seven Spark jobs per micro-batch:
 
-    Replayed batches (failure between write and checkpoint commit) are
-    filtered out by a source-file anti-join, upgrading the reference's
-    at-least-once duplicate inserts to effectively-once (ST3).
+    1. summary — parse once (``parse_rows``, persisted) and collect one
+       row per batch file: ok rows, bad rows and the dt set of its ok
+       rows.  Files whose payload is not a list appear with 0 rows.
+    2. probe — collect which of the batch's files the ledger records and
+       which of its files with rows silver already holds in the batch's
+       dt partitions.  Both tables are read under declared schemas.
+    3. silver write of the rows of files found in neither; skipped when
+       no row is new (ST6).
+    4. ledger append of every batch file the ledger does not record
+       (all-bad and non-list files too, so no file is re-parsed): one
+       file per batch, its rows built as a JVM-side literal.
 
-    The anti-join's key set is the processed-files LEDGER (one row per
-    file seen, appended after each silver write — O(files) steady
-    state) UNIONED with the silver files already present in the batch's
-    own dt partitions.  The partition-pruned silver probe is what makes
-    the crash window between the silver write and the ledger append
-    safe: a batch replayed across that window finds its files in silver
-    even though the ledger never recorded them.  Probing every batch —
-    rather than gating on a ledger batch-id heuristic — costs one
-    O(batch-partitions) read and leaves no undetectable window.
+    Replayed batches (failure between write and checkpoint commit) find
+    their files in the ledger and write nothing, upgrading the
+    reference's at-least-once duplicate inserts to effectively-once
+    (ST3).  The ledger append comes AFTER the silver write; a batch
+    replayed across a crash between the two finds its files in silver
+    by the partition-pruned probe, which runs on every batch.  The
+    metrics come from the summary.
     """
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # One parse, three consumers (silver rows, ledger file set,
-        # accounting) — persist so the JSON parse runs once per batch.
         candidates = parse_rows(batch_df).persist()
-        rows = silver_rows(candidates)
-        seen = None
         try:
-            ledger = _read_ledger(spark, silver_path)
-            # the dt partitions this batch's rows would land in — keys
-            # for the crash-window silver probe
-            batch_dts = [
-                r.d
-                for r in rows.select(F.to_date("fechahora").alias("d"))
-                .distinct()
+            # 1. one row per batch file; the raw batch's file names are
+            # unioned in so non-list files appear with 0 rows
+            summary = (
+                candidates.select(
+                    "source_file", "ok", F.to_date("fechahora").alias("dt")
+                )
+                .unionByName(
+                    batch_df.select(
+                        "source_file",
+                        F.lit(None).cast("boolean").alias("ok"),
+                        F.lit(None).cast("date").alias("dt"),
+                    )
+                )
+                .groupBy("source_file")
+                .agg(
+                    F.count_if("ok").alias("ok_rows"),
+                    F.count_if(~F.col("ok")).alias("bad_rows"),
+                    F.collect_set(F.when(F.col("ok"), F.col("dt"))).alias("dts"),
+                )
                 .collect()
-            ]
+            )
+            files = [r.source_file for r in summary]
+            with_rows = [r.source_file for r in summary if r.ok_rows]
+            dts = sorted({d for r in summary for d in r.dts})
+
+            # 2. which batch files are already recorded / already in silver
+            probes = []
+            ledger = _read_ledger(spark, silver_path)
+            if ledger is not None and files:
+                probes.append(
+                    ledger.where(F.col("source_file").isin(files)).select(
+                        "source_file", F.lit(True).alias("in_ledger")
+                    )
+                )
             silver_seen = (
-                _existing_files(spark, silver_path, batch_dts) if batch_dts else None
+                _existing_files(spark, silver_path, dts) if with_rows else None
             )
-            existing = None if ledger is None else ledger.select("source_file")
             if silver_seen is not None:
-                existing = (
-                    silver_seen if existing is None else existing.union(silver_seen)
+                probes.append(
+                    silver_seen.where(F.col("source_file").isin(with_rows)).select(
+                        "source_file", F.lit(False).alias("in_ledger")
+                    )
                 )
-            if existing is not None:
-                rows = rows.join(existing.distinct(), "source_file", "left_anti")
-            rows = rows.persist()
-            n_new = rows.count()
-            if n_new > 0:  # ST6: empty batch skips the write entirely
+            recorded, present = set(), set()
+            if probes:
+                for r in reduce(DataFrame.union, probes).collect():
+                    present.add(r.source_file)
+                    if r.in_ledger:
+                        recorded.add(r.source_file)
+
+            # 3. silver rows of the files seen nowhere yet
+            n_new = sum(r.ok_rows for r in summary if r.source_file not in present)
+            if n_new > 0:  # ST6: no new rows skips the write entirely
+                rows = silver_rows(candidates)
+                if present:
+                    rows = rows.where(~F.col("source_file").isin(sorted(present)))
+                write_silver(rows, silver_path)
+
+            # 4. ledger append, after the silver write
+            unrecorded = sorted(set(files) - recorded)
+            if unrecorded:
                 (
-                    rows.withColumn("dt", F.to_date("fechahora"))
+                    spark.range(0, 1, 1, 1)
+                    .select(
+                        F.explode(F.lit(unrecorded)).alias("source_file"),
+                        F.lit(batch_id).cast("long").alias("batch_id"),
+                    )
                     .write.mode("append")
-                    .partitionBy("dt")
-                    .parquet(silver_path)
+                    .parquet(_ledger_path(silver_path))
                 )
-            # Ledger append AFTER the silver write: a crash in between
-            # leaves the file unrecorded, and the replayed batch's
-            # silver probe (above) re-filters it against silver itself.
-            # Every file seen in the batch is recorded — including
-            # all-bad-row and non-list-payload files (from the RAW batch
-            # frame, which parse_rows' P5 filter never touches) — so no
-            # file is ever re-parsed.
-            seen = batch_df.select("source_file").distinct().persist()
-            new_files = seen
-            if ledger is not None:
-                new_files = seen.join(
-                    ledger.select("source_file").distinct(), "source_file", "left_anti"
-                )
-            (
-                new_files.withColumn("batch_id", F.lit(batch_id).cast("long"))
-                .write.mode("append")
-                .parquet(_ledger_path(silver_path))
-            )
             if on_metrics is not None:
-                acct = candidates.groupBy().agg(
-                    F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("bad_rows"),
-                ).collect()[0]
                 on_metrics(
                     batch_id,
                     {
-                        "files_processed": seen.count(),
+                        "files_processed": len(files),
                         "rows_inserted": n_new,
-                        "bad_rows": acct.bad_rows or 0,
+                        "bad_rows": sum(r.bad_rows for r in summary),
                     },
                 )
         finally:
-            # unpersist is a no-op on frames that never got persisted
             candidates.unpersist()
-            rows.unpersist()
-            if seen is not None:
-                seen.unpersist()
 
     return _write
 

@@ -138,3 +138,24 @@ def test_parse_is_ansi_safe_on_short_rows_and_overflow(spark, tmp_path):
     assert len(silver) == 1 and float(silver[0].valor) == 3920.0
     acct = ingest.accounting(candidates).collect()[0]
     assert (acct.rows_inserted, acct.bad_rows) == (1, 2)
+
+
+def test_epoch_range_bounds_ok_rows(spark, tmp_path):
+    """``ok`` holds exactly for epochs in [0001-01-01, 9999-12-31
+    23:59:59.999] UTC; rows outside it, or with a non-numeric epoch, are
+    bad (False, never NULL) and carry no timestamp."""
+    from pyspark.sql import functions as F
+
+    lo, hi = ingest.MIN_EPOCH_MS, ingest.MAX_EPOCH_MS
+    payload = [[str(lo), "1"], [str(hi), "1"], [str(lo - 1), "1"],
+               [str(hi + 1), "1"], ["99999999999999999", "1"], ["x", "1"]]
+    d = tmp_path / "bronze"
+    d.mkdir()
+    (d / "dolar-1.json").write_text(json.dumps(payload))
+    got = ingest.parse_rows(ingest.read_bronze(spark, str(d))).select(
+        "ok", F.unix_millis("fechahora").alias("ms")
+    ).collect()
+    assert [(r.ok, r.ms) for r in got] == [
+        (True, lo), (True, hi - 999), (False, None),
+        (False, None), (False, None), (False, None),
+    ]

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+from contextlib import contextmanager
 
 import pytest
 
@@ -339,16 +340,134 @@ def test_crash_between_silver_write_and_ledger_append_no_duplicates(spark, tmp_p
     assert spark.read.parquet(str(silver)).count() == 3
 
 
+@contextmanager
+def _job_group(spark, name):
+    """Run the body in Spark job group ``name``; yields a function that
+    returns the ids of the group's jobs so far."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        yield lambda: list(sc.statusTracker().getJobIdsForGroup(name))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _batch(spark, files):
+    return spark.createDataFrame(
+        [(f"file:///bronze/{name}", json.dumps(p)) for name, p in files],
+        "source_file string, raw_payload string",
+    )
+
+
 def test_ledger_read_failure_surfaces_instead_of_duplicating(spark, tmp_path):
-    """A ledger that EXISTS but cannot be read must raise — returning
-    None would silently disable the idempotency anti-join and write
-    duplicates (round-5 review)."""
+    """A ledger that EXISTS but cannot be read must fail the batch before
+    anything is written — treating it as absent would silently disable
+    the idempotency check and write duplicates.  The ledger is read under
+    a declared schema, so the error surfaces when the writer's probe
+    runs."""
     silver = tmp_path / "silver"
     ledger_dir = tmp_path / "silver_ledger"
     ledger_dir.mkdir()
     (ledger_dir / "part-00000.parquet").write_bytes(b"not a parquet file")
+    writer = sp.make_silver_batch_writer(str(silver))
     with pytest.raises(Exception):
-        sp._read_ledger(spark, str(silver))
+        writer(_batch(spark, [("dolar-1.json", PAYLOAD_A)]), 0)
+    assert not silver.exists()
+
+
+def test_writer_job_budget_and_metrics_on_mixed_batch(spark, tmp_path):
+    """One micro-batch holding every kind of file — new, all-bad,
+    non-list, already in the ledger, and in silver but not in the ledger
+    (a crash between the silver write and the ledger append) — commits
+    only the new file's rows, records every unrecorded file once, and
+    runs at most seven Spark jobs."""
+    from pyspark.sql import functions as F
+
+    from parcial_bigdata_spark.sources.ingest import parse_rows, silver_rows, write_silver
+
+    silver = tmp_path / "silver"
+    seen: list[tuple[int, dict]] = []
+    writer = sp.make_silver_batch_writer(
+        str(silver), on_metrics=lambda bid, m: seen.append((bid, m))
+    )
+    old = ("dolar-old.json", [["1757595656000", "3930.00"], ["bad", "x"]])
+    crash = ("dolar-crash.json", [["1757682056000", "3940.00"]])
+    good = ("dolar-good.json", PAYLOAD_A)
+    all_bad = ("dolar-bad.json", [["bad", "1"], ["1757509256000"]])
+    non_list = ("dolar-err.json", {"error": "maintenance"})
+    writer(_batch(spark, [old]), 0)
+    write_silver(silver_rows(parse_rows(_batch(spark, [crash]))), str(silver))
+
+    batch = _batch(spark, [good, all_bad, non_list, old, crash])
+    with _job_group(spark, "writer-mixed-batch") as jobs:
+        writer(batch, 1)
+        n_jobs = len(jobs())
+
+    assert seen[-1] == (
+        1, {"files_processed": 5, "rows_inserted": 2, "bad_rows": 3}
+    )
+    got = spark.read.parquet(str(silver)).select(
+        F.element_at(F.split("source_file", "/"), -1).alias("f"),
+        F.unix_millis("fechahora").alias("ms"),
+    )
+    assert sorted(map(tuple, got.collect())) == [
+        ("dolar-crash.json", 1757682056000),
+        ("dolar-good.json", 1757509256000),
+        ("dolar-good.json", 1757509257000),
+        ("dolar-old.json", 1757595656000),
+    ]
+    ledger = spark.read.parquet(str(silver) + "_ledger").select(
+        F.element_at(F.split("source_file", "/"), -1).alias("f"), "batch_id"
+    )
+    assert sorted(map(tuple, ledger.collect())) == [
+        ("dolar-bad.json", 1),
+        ("dolar-crash.json", 1),
+        ("dolar-err.json", 1),
+        ("dolar-good.json", 1),
+        ("dolar-old.json", 0),
+    ]
+    assert n_jobs <= 7, n_jobs
+
+
+def test_out_of_range_timestamps_are_bad_rows_not_a_wedged_stream(spark, tmp_path):
+    """An epoch-ms that fits bigint but overflows a timestamp (and one
+    past year 9999, which Python cannot collect) is a bad row: the batch
+    commits exactly its good row instead of failing on every replay."""
+    from pyspark.sql import functions as F
+
+    silver = tmp_path / "silver"
+    seen: list[tuple[int, dict]] = []
+    writer = sp.make_silver_batch_writer(
+        str(silver), on_metrics=lambda bid, m: seen.append((bid, m))
+    )
+    payload = [
+        ["99999999999999999", "3920.0"],
+        ["253402300800000", "1"],
+        ["1757509256000", "3920.00"],
+    ]
+    writer(_batch(spark, [("dolar-1.json", payload)]), 0)
+    assert seen[-1][1]["rows_inserted"] == 1
+    assert seen[-1][1]["bad_rows"] == 2
+    got = spark.read.parquet(str(silver)).select(
+        F.unix_millis("fechahora").alias("ms"), "valor"
+    )
+    assert [(r.ms, float(r.valor)) for r in got.collect()] == [
+        (1757509256000, 3920.0)
+    ]
+
+
+def test_get_spark_lists_explicit_paths_on_the_driver(spark, tmp_path):
+    """A file-stream micro-batch hands its files to Spark as explicit
+    paths; a get_spark session lists 40 of them without a Spark job."""
+    paths = []
+    for i in range(40):
+        path = tmp_path / f"dolar-{i}.json"
+        path.write_text("[]")
+        paths.append(str(path))
+    with _job_group(spark, "explicit-path-listing") as jobs:
+        df = spark.read.text(paths)
+        assert jobs() == []
+    assert len(df.inputFiles()) == 40
 
 
 def test_all_bad_and_nonlist_files_recorded_in_ledger(spark, tmp_path):
