@@ -1331,7 +1331,11 @@ def main() -> None:
     # Warm-up: run every headline plan once at the smallest SF so JIT,
     # whole-stage-codegen compilation, Python worker pools, and parquet
     # footer caches are paid before the timed runs (the metric is
-    # steady-state throughput, not cold start).
+    # steady-state throughput, not cold start).  The codegen part holds
+    # only while the session's codegen cache
+    # (spark.sql.codegen.cache.maxEntries, session.CODEGEN_CACHE_ENTRIES)
+    # holds all 478 headline classes; with a smaller cache every timed
+    # query compiles its classes again.
     warm_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir

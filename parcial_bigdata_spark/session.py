@@ -15,6 +15,11 @@ from pyspark.sql import SparkSession
 
 # explicit paths a local session lists on the driver, without a job
 DRIVER_LISTING_THRESHOLD = 1024
+# generated classes a session keeps compiled: over 2x the 478 of the
+# 29 bench.py headline queries.  Spark's default of 100 is smaller than
+# the set a repeated query set cycles through, so its LRU evicts every
+# class before its next use.
+CODEGEN_CACHE_ENTRIES = 1024
 
 
 def _cpus() -> int:
@@ -57,6 +62,9 @@ def get_spark(
             "spark.sql.sources.parallelPartitionDiscovery.threshold",
             str(DRIVER_LISTING_THRESHOLD),
         )
+        # Static conf (tune_runtime cannot set it): a repeated query
+        # reuses its generated classes and their JIT-compiled code.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     # Cluster posture (r17, guide §5): SPARK_GRAFT_STATE_STORE=rocksdb
     # switches streaming state to the built-in RocksDB provider —
@@ -77,12 +85,27 @@ def get_spark(
     return spark
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled in this JVM so far (the
+    codegen cache's misses).  The delta across a call counts the classes
+    it could not reuse."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def tune_runtime(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable conf to a session we did not create.
 
     The driver hands ``queries()`` callables an arbitrary session; these
     three settings are runtime-mutable and required for oracle-identical
     results (UTC timestamps) and sane local parallelism.
+
+    Static conf cannot be set here.  A session ``get_spark`` did not
+    build keeps Spark's 100-entry codegen cache
+    (``spark.sql.codegen.cache.maxEntries``, not
+    ``CODEGEN_CACHE_ENTRIES``), so a query set larger than that
+    recompiles its generated classes on every pass; results are the
+    same.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

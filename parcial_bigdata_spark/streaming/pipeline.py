@@ -135,7 +135,8 @@ def make_silver_batch_writer(
        no row is new (ST6).
     4. ledger append of every batch file the ledger does not record
        (all-bad and non-list files too, so no file is re-parsed): one
-       file per batch, its rows built as a JVM-side literal.
+       file per batch, its rows, batch id included, one JVM-side array
+       literal, so its generated code is the same for every batch.
 
     Replayed batches (failure between write and checkpoint commit) find
     their files in the ledger and write nothing, upgrading the
@@ -208,15 +209,24 @@ def make_silver_batch_writer(
                     rows = rows.where(~F.col("source_file").isin(sorted(present)))
                 write_silver(rows, silver_path)
 
-            # 4. ledger append, after the silver write
+            # 4. ledger append, after the silver write.  batch_id rides
+            # inside the rows' array literal (the zip of two literal
+            # arrays folds into one), which the generated code holds by
+            # reference: a bare lit(batch_id) is inlined into the code,
+            # so every batch would compile new classes.  A struct of
+            # literals per file would fold too, but costs several py4j
+            # calls per file (about 0.45 driver CPU-seconds per 100-file
+            # wave).
             unrecorded = sorted(set(files) - recorded)
             if unrecorded:
+                ledger_rows = F.arrays_zip(
+                    F.lit(unrecorded),
+                    F.array_repeat(F.lit(batch_id).cast("long"), len(unrecorded)),
+                )
                 (
                     spark.range(0, 1, 1, 1)
-                    .select(
-                        F.explode(F.lit(unrecorded)).alias("source_file"),
-                        F.lit(batch_id).cast("long").alias("batch_id"),
-                    )
+                    .select(F.inline(ledger_rows))
+                    .toDF("source_file", "batch_id")
                     .write.mode("append")
                     .parquet(_ledger_path(silver_path))
                 )

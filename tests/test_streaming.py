@@ -429,6 +429,41 @@ def test_writer_job_budget_and_metrics_on_mixed_batch(spark, tmp_path):
     assert n_jobs <= 7, n_jobs
 
 
+def test_steady_state_batches_compile_no_classes(spark, tmp_path):
+    """The writer's generated code does not depend on the batch: after
+    the batch that creates silver and the ledger, and the first one that
+    probes both, a micro-batch reuses every class from the codegen cache
+    (a ``batch_id`` inlined into the ledger append's code would compile
+    two classes per batch).  The ledger records each file once, under
+    its own batch id."""
+    from pyspark.sql import functions as F
+
+    from parcial_bigdata_spark.session import codegen_compiles
+
+    silver = tmp_path / "silver"
+    writer = sp.make_silver_batch_writer(str(silver))
+    compiled = {}
+    for batch_id in range(4):
+        day = 1757509256000 + batch_id * 86_400_000
+        files = [
+            (f"dolar-{batch_id}-{k}.json", [[str(day + k), "3920.00"]])
+            for k in range(2)
+        ]
+        batch = _batch(spark, files)
+        before = codegen_compiles(spark)
+        writer(batch, batch_id)
+        compiled[batch_id] = codegen_compiles(spark) - before
+
+    assert compiled[2] == 0 and compiled[3] == 0, compiled
+    ledger = spark.read.parquet(str(silver) + "_ledger").select(
+        F.element_at(F.split("source_file", "/"), -1).alias("f"), "batch_id"
+    )
+    assert sorted(map(tuple, ledger.collect())) == [
+        (f"dolar-{b}-{k}.json", b) for b in range(4) for k in range(2)
+    ]
+    assert spark.read.parquet(str(silver)).count() == 8
+
+
 def test_out_of_range_timestamps_are_bad_rows_not_a_wedged_stream(spark, tmp_path):
     """An epoch-ms that fits bigint but overflows a timestamp (and one
     past year 9999, which Python cannot collect) is a bad row: the batch

@@ -9,7 +9,9 @@ Usage:
 With --plans before (say), writes plans/<round>/<query>_before.txt for
 each query (default round dir: r17).  Timing methodology matches bench.py
 `_time_query` so numbers are directly comparable to BENCH_r*.json
-headline entries.
+headline entries.  Next to each time, stderr shows how many classes
+Janino compiled over the timed iterations: a query whose generated code
+is reused compiles 0 after its warm-up.
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from parcial_bigdata_spark.plans.registry import QUERIES  # noqa: E402
-from parcial_bigdata_spark.session import get_spark  # noqa: E402
+from parcial_bigdata_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -72,6 +74,7 @@ def main() -> None:
         # Guard the timing loop like the warm-up: one failing query must
         # not discard every already-collected timing (r16 advice).
         best = float("inf")
+        compiled = codegen_compiles(spark)
         try:
             for i in range(max(1, args.iters)):
                 spark.sparkContext.setJobDescription(f"time:{name}:{i}")
@@ -82,8 +85,10 @@ def main() -> None:
         except Exception as e:
             print(f"!! timing {name}: {e}", file=sys.stderr)
             continue
+        compiled = codegen_compiles(spark) - compiled
         results[name] = round(best, 3)
-        print(f"{name}: {results[name]}", file=sys.stderr)
+        print(f"{name}: {results[name]} ({compiled} classes compiled)",
+              file=sys.stderr)
     print(json.dumps(results))
 
 
